@@ -12,8 +12,9 @@ the engine already ships:
 2. core points = neighborhood size (INCLUDING the point itself, per the
    paper) >= ``min_pts`` — one combinable count aggregate;
 3. clusters = connected components over core-core neighbor edges
-   (`dedup.connected_components`: pointer-jumping min-label propagation,
-   O(log diameter) rounds) — cluster id = min core id in the component;
+   (`dedup.connected_components`: large-star/small-star rounds, finished
+   by a driver-side union-find once the edge table fits the broadcast
+   threshold) — cluster id = min core id in the component;
 4. border points (non-core with a core neighbor) join the MIN cluster id
    among their core neighbors — the paper leaves border assignment
    order-dependent; taking the min makes this engine's output

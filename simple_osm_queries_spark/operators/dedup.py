@@ -416,30 +416,6 @@ def _band_buckets(sigs: np.ndarray, bands: int) -> np.ndarray:
     return acc.view(np.int64)
 
 
-def minhash_signatures_py(text: Column, n: int = 3, num_perm: int = 64) -> Column:
-    """Whole MinHash pipeline (tokenize -> shingle -> crc32 -> perm-min) in
-    ONE Arrow-batched pandas UDF — the production path.
-
-    Rationale: Spark evaluates higher-order array lambdas interpreted (no
-    codegen), so the JVM shingle pipeline costs ~1.6 ms/doc; this numpy path
-    is ~30x cheaper and crosses Python exactly once. Shingle hash is crc32
-    (32-bit) — different constants than the JVM xxhash64 variant, same
-    estimator properties.
-    """
-    params = np.array(_perm_params(num_perm), dtype=np.uint64)
-    pa = params[:, 0][:, None]
-    pb = params[:, 1][:, None]
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _sig(texts: pd.Series) -> pd.Series:
-        if not len(texts):
-            return pd.Series([], dtype=object)
-        mins = _minhash_batch(texts, n, pa, pb).view(np.int64)
-        return pd.Series(list(mins))
-
-    return _sig(text)
-
-
 def minhash_sig_buckets_py(
     text: Column, n: int = 3, num_perm: int = 64, bands: int = 16
 ) -> Column:
@@ -1043,6 +1019,36 @@ def embedding_near_dups(
 # --- near-dup components (pairs -> groups -> survivors) ------------------------
 
 
+def _min_label_components(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(node, comp) of the undirected graph with edges a[i]-b[i], for every
+    node whose component minimum ``comp`` is not the node itself.
+
+    Union-find in whole-array steps: ids are remapped to their rank
+    (``np.unique`` sorts, so rank order is id order), every root hooks onto
+    the smallest root it shares an edge with, and pointer jumping then
+    compresses every node onto its root. Hooks only ever point at a smaller
+    rank, so each tree's root is its minimum and no cycle can form; the
+    loop ends when no edge joins two trees.
+    """
+    ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    u, v = inv[: len(a)], inv[len(a):]
+    parent = np.arange(len(ids))
+    while True:
+        pu, pv = parent[u], parent[v]
+        cross = pu != pv
+        if not cross.any():
+            break
+        pu, pv = pu[cross], pv[cross]
+        np.minimum.at(parent, np.maximum(pu, pv), np.minimum(pu, pv))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    moved = parent != np.arange(len(ids))
+    return ids[moved], ids[parent[moved]]
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -1054,9 +1060,12 @@ def connected_components(
 
     The standard last step of a near-dup pipeline: candidate pairs form an
     undirected graph; each connected component is one duplicate group and
-    keeps one survivor. Algorithm: alternating LARGE-STAR / SMALL-STAR
-    edge rewiring (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14 — the published O(log²) bound, O(log) in practice):
+    keeps one survivor.
+
+    Rounds: alternating LARGE-STAR / SMALL-STAR edge rewiring (Kiveris et
+    al., "Connected Components in MapReduce and Beyond", SoCC'14 — the
+    published O(log²) bound, O(log) in practice) over an oriented edge
+    table with one row (a, b), a > b, per undirected edge:
 
     * large-star, per center v: every neighbor LARGER than v rewires to
       m = min(Γ(v) ∪ {v});
@@ -1066,13 +1075,28 @@ def connected_components(
     each step is one groupBy(min) + one equi-join over the edge table, and
     the edge count never grows. Iterated to a fixpoint the edges form
     stars rooted at each component's minimum id, read off as (node, comp).
-    Plain min-label propagation (even with pointer-doubling shortcuts on
-    the label table) moves information ONE GRAPH HOP per edge pass, so a
-    path-shaped graph — the DBSCAN eps graph near percolation — needs
-    O(diameter) passes (measured: a 3k-node snake still shrank by ~1
-    label/round at round 23 while per-round wall time compounded); star
-    rewiring contracts such chains geometrically. Every round is
-    checkpointed eagerly so lineage stays flat.
+    Plain min-label propagation moves information ONE GRAPH HOP per edge
+    pass, so a path-shaped graph — the DBSCAN eps graph near percolation —
+    needs O(diameter) passes; star rewiring contracts such chains
+    geometrically. Each round ends in one aggregate over the new edge
+    table that both tests for star form and counts the edges.
+
+    Driver finish: the rounds stop as soon as the edge table fits
+    ``spark.sql.autoBroadcastJoinThreshold`` at 16 bytes an edge (two
+    longs) — the session's own "small enough to ship whole" size. The
+    edges are then collected through Arrow, labelled by a numpy union-find
+    (`_min_label_components`), and the labels broadcast-joined onto the
+    node table. A graph that starts under the limit runs no round at all;
+    setting the threshold to -1 keeps every round distributed. The switch
+    is exact at any round: large-star never changes an edge's ``a`` side
+    and small-star re-emits every node it rewires, so the edge table's
+    node set and each component's minimum are the same in every round,
+    and labelling any round's table gives the converged labels.
+
+    The input is scanned once: its pairs are cached by the first job that
+    computes them, and both the node table and the first edge table read
+    those blocks. Every round's edge table is checkpointed so lineage
+    stays flat.
 
     Durability: by default rounds use ``localCheckpoint`` (blocks live on
     executors — fine single-node / interactive, but a lost executor kills
@@ -1082,13 +1106,15 @@ def connected_components(
     Superseded rounds are unpersisted as soon as the next round
     materializes, so storage stays O(1) rounds, not O(log diameter).
 
-    Raises RuntimeError if labels still change after ``max_iter`` rounds
-    (2^25-diameter coverage at the default — a hit means pathological input
-    that must not silently return half-propagated components).
+    Raises RuntimeError if the graph is neither in star form nor under the
+    driver limit after ``max_iter`` rounds (2^25-diameter coverage at the
+    default — a hit means pathological input that must not silently
+    return half-propagated components).
     """
     spark = pairs.sparkSession
     if checkpoint_dir is not None:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
+    driver_limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
 
     def _ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
         # eager=False marks the plan for checkpointing and lets the NEXT
@@ -1096,7 +1122,7 @@ def connected_components(
         # the end of any job that computes the marked RDD; the star-form
         # check's groupBy consumes every partition, so nothing is left
         # uncomputed). Fusing the materialization into the check saves one
-        # scheduled job per round (r6 continuation; measured below).
+        # scheduled job per round.
         if checkpoint_dir is not None:
             return df.checkpoint(eager=eager)
         return df.localCheckpoint(eager=eager)
@@ -1110,25 +1136,29 @@ def connected_components(
         except Exception:  # pragma: no cover — plan shape drift: leak, don't crash
             df.unpersist()
 
+    # the one scan of the input: nodes and the first edge table both read
+    # these blocks instead of each re-running the pairs plan. A lazy local
+    # checkpoint caches them in the first job that computes them; under
+    # checkpoint_dir a plain persist keeps the lineage that recovers lost
+    # blocks (a lazy reliable checkpoint is not persisted: it re-ran the
+    # pairs plan, 3 scans per call, measured)
     e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-    # all input nodes (star rewiring can drop a component's ROOT from the
-    # edge table once the component is a star - it must still get a label)
-    # lazy: materialized by the final labels checkpoint (the only consumer)
-    nodes = _ckpt(
+    e = e.persist() if checkpoint_dir is not None else e.localCheckpoint(eager=False)
+    # all input nodes: a node whose only pairs are self-loops is on no edge
+    # but must still get a label (read once, by the final labels checkpoint)
+    nodes = (
         e.select(F.col("a").alias("node"))
         .unionByName(e.select(F.col("b").alias("node")))
-        .distinct(),
-        eager=False,
+        .distinct()
     )
     # ORIENTED canonical edge table: one row (a, b) with a > b per
-    # undirected edge (r6, guide §2.3 "shuffle fewer bytes"): both star
+    # undirected edge (guide §2.3 "shuffle fewer bytes"): both star
     # steps are expressible on the half-sized representation — every
     # per-round shuffle (dedup, groupBy-min, join) moves half the rows of
-    # the previous symmetric form (measured 7.8 s -> 4.2 s warm / 11.0 ->
-    # 8.8 s cold at 1M docs / 1M pairs), and the rewired output of each
-    # step is already
-    # oriented (rewiring always points at a smaller node), so only the
-    # small-star output needs re-canonicalization.
+    # the symmetric form (measured 7.8 s -> 4.2 s warm / 11.0 -> 8.8 s
+    # cold at 1M docs / 1M pairs), and the rewired output of each step is
+    # already oriented (rewiring always points at a smaller node), so only
+    # the small-star output needs re-canonicalization.
     # lazy: the star-form check below materializes the blocks in ITS job
     edges = _ckpt(
         e.select(
@@ -1139,13 +1169,9 @@ def connected_components(
         eager=False,
     )
 
-    def _labels_of(g: DataFrame) -> DataFrame:
-        # (node, comp): comp = min(self, min smaller neighbor). At the star
-        # fixpoint every member's single oriented edge points at the root
-        # (comp=root); roots/isolated nodes appear on no `a` side
-        # (comp=self). A node's LARGER neighbors can never be its min, so
-        # the oriented view loses nothing.
-        mn = g.groupBy(F.col("a").alias("node")).agg(F.min("b").alias("mn"))
+    def _label_nodes(mn: DataFrame) -> DataFrame:
+        # (node, comp) from (node, mn) rows: comp = min(self, mn); nodes
+        # without a row are their own component's minimum
         return nodes.join(mn, "node", "left").select(
             "node",
             F.least(F.coalesce(F.col("mn"), F.col("node")), F.col("node")).alias(
@@ -1153,34 +1179,56 @@ def connected_components(
             ),
         )
 
-    def _is_star_forest(g: DataFrame) -> bool:
-        # EXACT fixpoint test on the oriented table (r6, replaces the r5
-        # fingerprint-stability check that needed one extra confirming
-        # LS+SS round): the iteration's fixpoints are precisely star
-        # forests rooted at component minima, i.e. (1) no node appears on
-        # both the hi and the lo side, and (2) no hi node points at two
-        # hubs. One unpivot+aggregate job over the checkpointed table —
-        # a violation short-circuits via limit(1). On star form, LS maps
-        # every edge (m, r) to itself (the root has no smaller neighbor)
-        # and SS re-emits (m, min{r}) = (m, r), so star form <=> no
-        # further change — detection fires in the round that PRODUCES the
-        # fixpoint instead of the round after (measured: one full round
-        # saved on every converging input).
+    def _driver_labels(g: DataFrame) -> DataFrame:
+        import pyarrow as pa
+
+        tbl = g.toArrow()
+        node, comp = _min_label_components(
+            tbl.column("a").to_numpy(), tbl.column("b").to_numpy()
+        )
+        typ = tbl.schema.field("a").type
+        mn = spark.createDataFrame(
+            pa.table({"node": pa.array(node, typ), "mn": pa.array(comp, typ)})
+        )
+        return _label_nodes(F.broadcast(mn))
+
+    def _star_check(g: DataFrame) -> tuple[bool, bool]:
+        # EXACT fixpoint test on the oriented table: the iteration's
+        # fixpoints are precisely star forests rooted at component minima,
+        # i.e. (1) no node appears on both the hi and the lo side, and (2)
+        # no hi node points at two hubs. On star form, LS maps every edge
+        # (m, r) to itself (the root has no smaller neighbor) and SS
+        # re-emits (m, min{r}) = (m, r), so star form <=> no further
+        # change — detection fires in the round that PRODUCES the fixpoint
+        # instead of the round after. One unpivot + aggregate over the
+        # checkpointed table; the same aggregate sums each node's hi-side
+        # count into the edge count that decides the driver finish.
+        # Returns (star form, fits the driver limit).
         t = g.select(F.col("a").alias("n"), F.lit(1).alias("h")).unionByName(
             g.select(F.col("b").alias("n"), F.lit(0).alias("h"))
         )
-        bad = (
+        stats = (
             t.groupBy("n")
             .agg(F.sum("h").alias("nh"), F.min("h").alias("mn"), F.max("h").alias("mx"))
-            .filter(((F.col("mn") == 0) & (F.col("mx") == 1)) | (F.col("nh") > 1))
-            .limit(1)
-            .count()
+            .agg(
+                F.count_if(
+                    ((F.col("mn") == 0) & (F.col("mx") == 1)) | (F.col("nh") > 1)
+                ).alias("bad"),
+                F.sum("nh").alias("m"),
+            )
         )
-        return bad == 0
+        # the lazy checkpoint of g is materialized by this job only because
+        # the groupBy's shuffle reads every partition of g (planning only,
+        # no job)
+        assert "Exchange hashpartitioning" in (
+            stats._jdf.queryExecution().executedPlan().toString()
+        ), "star-form check lost its shuffle; lazy round checkpoints would not materialize"
+        row = stats.collect()[0]
+        return row.bad == 0, (row.m or 0) * 16 <= driver_limit
 
-    converged = _is_star_forest(edges)
+    converged, fits = _star_check(edges)
     for _ in range(max_iter):
-        if converged:
+        if converged or fits:
             break
         # LARGE-STAR: per center c, neighbors n > c rewire to
         # m(c) = min(neighbors(c) + {c}). On oriented rows: m(c) =
@@ -1193,10 +1241,10 @@ def connected_components(
             mins.select(F.col("a").alias("b"), "mn"), "b", "left"
         ).select("a", F.coalesce("mn", F.col("b")).alias("b"))
         # consumed twice inside this round (SS groupBy + SS join) — plain
-        # persist; it materializes during the round-end checkpoint and its
+        # persist; it materializes during the round-end check and its
         # lineage is one shallow groupBy+join over the checkpointed
         # previous round (checkpointing HERE too doubled per-round
-        # materializations, measured r5)
+        # materializations, measured)
         g1 = ls.persist()
         # SMALL-STAR: per center a, a and its smaller neighbors {b} rewire
         # to m = min of that set — centers are exactly the `a` side of the
@@ -1222,18 +1270,29 @@ def connected_components(
             .distinct(),
             eager=False,
         )
-        converged = _is_star_forest(edges)
+        converged, fits = _star_check(edges)
         _free(prev_edges)
         g1.unpersist()
-    if not converged:
+    if not (converged or fits):
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} "
             "large-star/small-star rounds; refusing to return partially "
             "contracted components"
         )
-    labels = _ckpt(_labels_of(edges))
+    if fits:
+        labels = _ckpt(_driver_labels(edges))
+    else:
+        # star form: each member's single oriented edge points at its root
+        labels = _ckpt(
+            _label_nodes(
+                edges.groupBy(F.col("a").alias("node")).agg(F.min("b").alias("mn"))
+            )
+        )
     _free(edges)
-    _free(nodes)
+    if checkpoint_dir is not None:
+        e.unpersist()
+    else:
+        _free(e)
     return labels
 
 

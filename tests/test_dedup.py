@@ -1,5 +1,7 @@
 """Dedup operator family vs small Python oracles."""
 
+import contextlib
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -113,11 +115,10 @@ def test_embedding_near_dups(spark):
         assert c == pytest.approx(expected, abs=1e-6)
 
 
-def test_embedding_verify_broadcast_hint_identical(spark):
+def test_embedding_verify_broadcast_hint_identical(spark, tmp_path):
     """r6: the size-guarded broadcast HINT on the verify joins changes the
     join strategy only — pairs and cosines must be bit-identical to the
     shuffled-join plan (broadcast_verify_bytes=0 disables the hint)."""
-    import contextlib
     import io
 
     rng = np.random.RandomState(11)
@@ -126,19 +127,28 @@ def test_embedding_verify_broadcast_hint_identical(spark):
     base[5] = base[4]
     base[9] = base[8] * 2.0  # colinear -> cosine exactly 1 territory
     rows = [(i, [float(x) for x in base[i]]) for i in range(16)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    hinted = dedup.embedding_near_dups(df, threshold=0.9)
-    plain = dedup.embedding_near_dups(df, threshold=0.9, broadcast_verify_bytes=0)
-    got_h = sorted((r.id_a, r.id_b, r.cosine) for r in hinted.collect())
-    got_p = sorted((r.id_a, r.id_b, r.cosine) for r in plain.collect())
-    assert got_h == got_p and len(got_h) >= 3
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        hinted.explain("formatted")
-    # the vec-side joins are broadcast (NB: on a local fixture this small
-    # the optimizer may broadcast the un-hinted plan too; the identity
-    # check above is the substance, this just pins the hint taking effect)
-    assert "BroadcastHashJoin" in buf.getvalue()
+    # through parquet: the guard needs a plan-size estimate, which a
+    # Python-list relation does not have (it estimates Long.MaxValue)
+    spark.createDataFrame(rows, "vec_id long, embedding array<float>").write.parquet(
+        str(tmp_path / "vecs")
+    )
+    df = spark.read.parquet(str(tmp_path / "vecs"))
+
+    def plan(pairs):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            pairs.explain("formatted")
+        return buf.getvalue()
+
+    # no size-based broadcasts: only the hint can make a join broadcast
+    with _broadcast_threshold(spark, "-1"):
+        hinted = dedup.embedding_near_dups(df, threshold=0.9)
+        plain = dedup.embedding_near_dups(df, threshold=0.9, broadcast_verify_bytes=0)
+        got_h = sorted((r.id_a, r.id_b, r.cosine) for r in hinted.collect())
+        got_p = sorted((r.id_a, r.id_b, r.cosine) for r in plain.collect())
+        assert got_h == got_p and len(got_h) >= 3
+        assert "BroadcastHashJoin" in plan(hinted)
+        assert "BroadcastHashJoin" not in plan(plain)
 
 
 def test_ngram_jaccard_hot_shingle_cap(spark):
@@ -298,6 +308,53 @@ def _uf_components(pairs):
     return {n: find(n) for n in parent}
 
 
+@contextlib.contextmanager
+def _broadcast_threshold(spark, value):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+# connected_components finishes on the driver once the edge table fits the
+# broadcast threshold; -1 keeps every round distributed. Each components
+# test runs under both confs.
+CC_PATHS = ("driver", "distributed")
+
+
+def _cc_path(spark, path):
+    if path == "driver":
+        return contextlib.nullcontext()
+    return _broadcast_threshold(spark, "-1")
+
+
+def _cc_labels(df, **kw):
+    return {r.node: r.comp for r in dedup.connected_components(df, **kw).collect()}
+
+
+def test_min_label_components_matches_union_find():
+    rng = np.random.RandomState(3)
+    for n_nodes, n_edges in [(1, 1), (50, 20), (300, 400), (2000, 1500)]:
+        a = rng.randint(0, n_nodes, n_edges).astype(np.int64) * 7 - 5
+        b = rng.randint(0, n_nodes, n_edges).astype(np.int64) * 7 - 5
+        node, comp = dedup._min_label_components(a, b)
+        want = _uf_components(zip(a.tolist(), b.tolist()))
+        assert dict(zip(node.tolist(), comp.tolist())) == {
+            k: v for k, v in want.items() if k != v
+        }
+    # sorted path (one hook round, log-depth jumping) and string ids
+    path = np.arange(10_000)
+    node, comp = dedup._min_label_components(path[1:], path[:-1])
+    assert node.tolist() == path[1:].tolist() and not comp.any()
+    node, comp = dedup._min_label_components(
+        np.array(["b", "c", "x"], dtype=object), np.array(["a", "b", "y"], dtype=object)
+    )
+    assert dict(zip(node, comp)) == {"b": "a", "c": "a", "y": "x"}
+
+
 def test_connected_components_vs_union_find(spark):
     import random
 
@@ -307,12 +364,21 @@ def test_connected_components_vs_union_find(spark):
     pairs += [(100 + rng.randrange(20), 100 + rng.randrange(20)) for _ in range(40)]
     pairs += [(200, 201), (300, 301), (301, 302), (300, 302)]
     pairs = [(a, b) for a, b in pairs if a != b]
+    # self-loop-only nodes (on no edge, still labelled by themselves),
+    # duplicate pairs and both orientations of one edge
+    pairs += [(505, 505), (509, 509), (509, 509), (501, 502), (502, 501), (501, 502)]
+    pairs += [(503, 502), (503, 503), (540, 541), (541, 540), (542, 541), (541, 542)]
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    got = {r.node: r.comp for r in dedup.connected_components(df).collect()}
+    empty = spark.createDataFrame([], "id_a long, id_b long")
     want = _uf_components(pairs)
-    # oracle roots are min-of-component by construction (union by min)
-    assert got == want
-    assert got[30] == 0  # far end of the path reaches the min label
+    assert (want[505], want[509], want[503], want[542]) == (505, 509, 501, 540)
+    for path in CC_PATHS:
+        with _cc_path(spark, path):
+            got = _cc_labels(df)
+            assert _cc_labels(empty) == {}, path
+        # oracle roots are min-of-component by construction (union by min)
+        assert got == want, path
+        assert got[30] == 0, path  # far end of the path reaches the min label
 
 
 def test_near_dup_survivors(docs):
@@ -327,42 +393,101 @@ def test_near_dup_survivors(docs):
 def test_connected_components_reliable_checkpoint(spark, tmp_path):
     # same fixture through the checkpoint(reliable) path: identical labels,
     # and the checkpoint dir actually receives data
-    pairs = [(i, i + 1) for i in range(0, 30)] + [(200, 201), (300, 302), (301, 302)]
-    df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    ckdir = str(tmp_path / "cc_ckpt")
-    got = {
-        r.node: r.comp
-        for r in dedup.connected_components(df, checkpoint_dir=ckdir).collect()
-    }
-    assert got == _uf_components(pairs)
     import os
 
-    found = [f for _, _, fs in os.walk(ckdir) for f in fs]
-    assert found, "reliable checkpoint wrote nothing"
+    pairs = [(i, i + 1) for i in range(0, 30)] + [(200, 201), (300, 302), (301, 302)]
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    for path in CC_PATHS:
+        ckdir = str(tmp_path / f"cc_ckpt_{path}")
+        with _cc_path(spark, path):
+            got = _cc_labels(df, checkpoint_dir=ckdir)
+        assert got == _uf_components(pairs), path
+        found = [f for _, _, fs in os.walk(ckdir) for f in fs]
+        assert found, f"reliable checkpoint wrote nothing ({path})"
 
 
 def test_connected_components_unpersists_rounds(spark):
     # superseded rounds must release their storage: after convergence only
     # O(1) label/edge tables may remain cached (not one per round)
     jsc = spark.sparkContext._jsc.sc()
-    before = len(jsc.getRDDStorageInfo())
     pairs = [(i, i + 1) for i in range(0, 30)]
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    labels = dedup.connected_components(df)
-    labels.count()
-    after = len(jsc.getRDDStorageInfo())
-    # the returned labels table itself stays materialized; everything else
-    # from ~8 rounds (edges + per-round labels) must be gone
-    assert after - before <= 2, f"leaked {after - before} cached RDDs"
+    for path in CC_PATHS:
+        before = len(jsc.getRDDStorageInfo())
+        with _cc_path(spark, path):
+            labels = dedup.connected_components(df)
+            labels.count()
+        after = len(jsc.getRDDStorageInfo())
+        # the returned labels table itself stays materialized; everything
+        # else from ~8 rounds (edges + per-round labels) must be gone
+        assert after - before <= 2, f"leaked {after - before} cached RDDs ({path})"
 
 
 def test_connected_components_nonconvergence_raises(spark):
+    # the round loop's max_iter guard: distributed rounds only (the driver
+    # finish would label this small graph without a round)
     pairs = [(i, i + 1) for i in range(0, 40)]  # needs ~6 rounds
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
     import pytest as _pytest
 
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(df, max_iter=2)
+    with _broadcast_threshold(spark, "-1"):
+        with _pytest.raises(RuntimeError, match="did not converge"):
+            dedup.connected_components(df, max_iter=2)
+
+
+def test_connected_components_driver_finish_after_rounds(spark):
+    """An edge table above the driver limit contracts under it after one
+    round and is finished on the driver while still not in star form."""
+    clique = [(100 + i, 100 + j) for i in range(40) for j in range(i)]  # 780 edges
+    chain = [(i, i + 1) for i in range(60)]
+    pairs = clique + chain
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    # 16 B an edge: 840 edges start above 300, one round leaves 39 + 60
+    with _broadcast_threshold(spark, str(300 * 16)):
+        # above the limit and not a star forest before any round
+        with pytest.raises(RuntimeError, match="did not converge"):
+            dedup.connected_components(df, max_iter=0)
+        got = _cc_labels(df, max_iter=1)
+    assert got == _uf_components(pairs)
+    # one distributed round alone does not reach star form
+    with _broadcast_threshold(spark, "-1"):
+        with pytest.raises(RuntimeError, match="did not converge"):
+            dedup.connected_components(df, max_iter=1)
+
+
+def test_connected_components_jobs_and_single_scan(spark, tmp_path):
+    """The pairs plan is evaluated once per call on both paths, with and
+    without a checkpoint dir, and a ~2k-edge graph finishes on the driver
+    in at most 10 jobs."""
+    import random
+
+    rng = random.Random(7)
+    pairs = [(rng.randrange(2500), rng.randrange(2500)) for _ in range(2000)]
+    sc = spark.sparkContext
+    for path, ckdir in [(p, d) for p in CC_PATHS for d in (None, str(tmp_path / p))]:
+        rows = sc.accumulator(0)
+
+        def count_rows(x):
+            rows.add(1)
+            return x
+
+        seen = F.udf(count_rows, "long").asNondeterministic()
+        df = spark.createDataFrame(pairs, "id_a long, id_b long").select(
+            seen("id_a").alias("id_a"), "id_b"
+        )
+        group = f"cc-jobs-{path}-{ckdir is None}"
+        sc.setJobGroup(group, group)
+        try:
+            with _cc_path(spark, path):
+                got = _cc_labels(df, checkpoint_dir=ckdir)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert got == _uf_components(pairs), group
+        assert rows.value == len(pairs), group
+        if path == "driver" and ckdir is None:
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+            assert len(jobs) <= 10, f"{len(jobs)} jobs"
 
 
 def test_connected_components_long_path_graph(spark):
@@ -378,20 +503,24 @@ def test_connected_components_long_path_graph(spark):
     pairs = spark.range(n - 1).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
-    t0 = time.time()
-    comp = dedup.connected_components(pairs, max_iter=25)
-    stats = comp.agg(
-        F.count("*").alias("n"),
-        F.countDistinct("comp").alias("k"),
-        F.max("comp").alias("mx"),
-    ).first()
-    took = time.time() - t0
-    assert (stats.n, stats.k, stats.mx) == (n, 1, 0)
-    assert took < 120, f"path graph took {took:.0f}s — star contraction broken"
     # two disjoint chains -> two components labelled by their minima
     two = spark.range(200).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     ).filter(F.col("id_a") != 100).filter(F.col("id_b") != 100)
-    comp2 = dedup.connected_components(two.filter((F.col("id_a") < 100) | (F.col("id_a") > 100)))
-    ks = sorted(r.comp for r in comp2.select("comp").distinct().collect())
-    assert ks == [0, 101]
+    for path in CC_PATHS:
+        with _cc_path(spark, path):
+            t0 = time.time()
+            comp = dedup.connected_components(pairs, max_iter=25)
+            stats = comp.agg(
+                F.count("*").alias("n"),
+                F.countDistinct("comp").alias("k"),
+                F.max("comp").alias("mx"),
+            ).first()
+            took = time.time() - t0
+            assert (stats.n, stats.k, stats.mx) == (n, 1, 0), path
+            assert took < 120, f"path graph took {took:.0f}s — star contraction broken ({path})"
+            comp2 = dedup.connected_components(
+                two.filter((F.col("id_a") < 100) | (F.col("id_a") > 100))
+            )
+            ks = sorted(r.comp for r in comp2.select("comp").distinct().collect())
+        assert ks == [0, 101], path
