@@ -850,35 +850,20 @@ def embedding_near_dups(
     sig_bits: int = 64,
     chunks: int = 4,
     max_bucket: int | None = 100_000,
-    verify: str = "join",
     broadcast_verify_bytes: int = 256 * 1024 * 1024,
 ) -> DataFrame:
     """Cosine >= threshold pairs: hyperplane-LSH chunk candidates, exact
     column-math cosine verification. Approximate recall (LSH), exact
     precision (verification).
 
-    ``verify``: how candidate pairs get their exact cosine —
-    'join' (default) re-attaches both vectors via two equi-joins (the
-    any-scale path: shuffle bytes ~ |candidates| x 2 x dim); when the
-    vector table's plan-size estimate fits ``broadcast_verify_bytes`` the
-    joins are broadcast-HINTED (one JVM copy per executor, pair table not
-    re-shuffled — measured verify ~2.5 -> ~0.8 s at 250k x 64-d), falling
-    back to the shuffled joins above the guard; 'broadcast'
-    collects the (id, vector) table once, broadcasts it, and each Arrow
-    batch GATHERS rows by searchsorted id lookup — candidates then cross
-    the boundary as 16-byte id pairs instead of 0.5 KB vector pairs
-    (guide §2.3 "shuffle keys, not payloads"; verify stage 5.7 -> 3.1 s
-    in a clean-session A/B at 250k x 64-d with 3.8M candidate pairs);
-    'auto' picks 'broadcast' when the optimizer's size estimate for the
-    vector table is under ``broadcast_verify_bytes``. The broadcast path
-    is NOT the default because every forked Python worker holds the full
-    float64 matrix (local[32]: 32 x 128 MB at 250k x 64-d) — measured
-    24.9 s mid-bench under cache pressure vs 6.8 s for 'join'; prefer it
-    only with few workers per host or small tables. Both paths build the
-    per-pair (n, dim) float64 matrices the same way before the same
-    einsum calls, so cosines are bit-identical. The broadcast path
-    requires unique long ids (duplicate ids would be join-multiplied in
-    the 'join' path, gathered-once here).
+    Verification re-attaches both vectors to the candidate pairs via two
+    equi-joins (the any-scale path: shuffle bytes ~ |candidates| x 2 x
+    dim). When the vector table's plan-size estimate fits
+    ``broadcast_verify_bytes``, both joins are broadcast-HINTED (one JVM
+    copy per executor, pair table not re-shuffled — measured verify ~2.5 ->
+    ~0.8 s at 250k x 64-d); above the guard, or with no usable estimate,
+    the joins stay shuffled. ``broadcast_verify_bytes=0`` opts out of the
+    hint.
 
     Shuffle shape: candidate generation (chunk explode x`chunks`, the
     equi-join, and the distinct) carries ONLY (id, chunk, val) — 24 bytes a
@@ -902,8 +887,7 @@ def embedding_near_dups(
     mask = (1 << width) - 1
     # NOT persisted (r6 A/B): the hyperplane matmul UDF is cheap enough
     # that recomputing it per consumer ties with cache materialization
-    # (3.1 vs 3.5 s at 250k x 64-d); handles stay for interface parity.
-    handles: list = []
+    # (3.1 vs 3.5 s at 250k x 64-d).
     chunked = sh.select(
         "id",
         F.explode(
@@ -946,50 +930,6 @@ def embedding_near_dups(
         except Exception:  # pragma: no cover — internal-API drift
             return None
 
-    if verify == "auto":
-        est = _vec_plan_bytes()
-        id_is_long = isinstance(df.schema[id_col].dataType, T.LongType)
-        verify = (
-            "broadcast"
-            if id_is_long and est is not None and est <= broadcast_verify_bytes
-            else "join"
-        )
-    if verify == "broadcast":
-        # toArrow + flatten: the vector matrix materializes as one numpy
-        # reshape of the Arrow child buffer (a toPandas of list cells built
-        # 250k Python lists — measured ~3 s of the build)
-        tbl = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")).toArrow()
-        ids = tbl.column("id").to_numpy()
-        flat = tbl.column("vec").combine_chunks().flatten().to_numpy()
-        n_rows = len(ids)
-        mat = flat.astype(np.float64, copy=False).reshape(n_rows, -1) if n_rows else np.zeros((0, 1))
-        order = np.argsort(ids)
-        bc = df.sparkSession.sparkContext.broadcast(
-            (ids[order].astype(np.int64), np.ascontiguousarray(mat[order]))
-        )
-
-        def _verify(batches):
-            ids_s, m = bc.value
-            for b in batches:
-                if not len(b):
-                    continue
-                ia = b["id_a"].to_numpy(np.int64)
-                ib = b["id_b"].to_numpy(np.int64)
-                a = np.ascontiguousarray(m[np.searchsorted(ids_s, ia)])
-                v = np.ascontiguousarray(m[np.searchsorted(ids_s, ib)])
-                dots = np.einsum("ij,ij->i", a, v)
-                na = np.sqrt(np.einsum("ij,ij->i", a, a))
-                nb = np.sqrt(np.einsum("ij,ij->i", v, v))
-                cos = dots / (na * nb)
-                keep = cos >= threshold
-                yield pd.DataFrame(
-                    {"id_a": ia[keep], "id_b": ib[keep], "cosine": cos[keep]}
-                )
-
-        return _track_persisted(
-            pairs.mapInPandas(_verify, "id_a long, id_b long, cosine double"),
-            handles,
-        )
     vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     va = vecs.withColumnsRenamed({"id": "id_a", "vec": "vec_a"})
     vb = vecs.withColumnsRenamed({"id": "id_b", "vec": "vec_b"})
@@ -997,22 +937,21 @@ def embedding_near_dups(
     # guide §3.1): the shuffled verify joins move ~|candidates| x 2 x dim
     # of vector payload PLUS re-shuffle the pair table twice; a broadcast
     # hash join moves the vector table once per executor instead (ONE JVM
-    # copy — unlike verify='broadcast', no per-Python-worker matrix), and
-    # the pair table streams map-side. Measured at 250k x 64-d / 3.8M
-    # candidate pairs: verify stage ~2.5 -> ~0.8 s (end-to-end 5.1 ->
-    # 3.3 s), results identical (same join, different strategy). The size
+    # copy, no per-Python-worker matrix), and the pair table streams
+    # map-side. Measured at 250k x 64-d / 3.8M candidate pairs: verify
+    # stage ~2.5 -> ~0.8 s (end-to-end 5.1 -> 3.3 s), results identical
+    # (same join, different strategy). The size
     # guard keeps the any-scale shuffled plan when the vector table is too
     # big to broadcast or has no usable estimate.
     est = _vec_plan_bytes()
     if est is not None and est <= broadcast_verify_bytes:
         va, vb = F.broadcast(va), F.broadcast(vb)
-    return _track_persisted(
+    return (
         pairs.join(va, "id_a")
         .join(vb, "id_b")
         .withColumn("cosine", pairwise_cosine_udf()(F.col("vec_a"), F.col("vec_b")))
         .filter(F.col("cosine") >= F.lit(threshold))
-        .select("id_a", "id_b", "cosine"),
-        handles,
+        .select("id_a", "id_b", "cosine")
     )
 
 

@@ -30,8 +30,8 @@ tiles), so they are first-class here:
 
 Scale shape: length/area are per-row column expressions (no shuffle, no
 UDF — whole-stage codegen); simplify is one Arrow pass, no shuffle.
-All distances use knn.EARTH_RADIUS_M (the H3-documented authalic radius)
-so meters agree across the kNN, buffer, and measure families.
+All distances use :data:`EARTH_RADIUS_M` (the H3-documented authalic
+radius) so meters agree across the kNN, buffer, and measure families.
 """
 
 from __future__ import annotations
@@ -43,13 +43,20 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from simple_osm_queries_spark.operators.knn import EARTH_RADIUS_M
+# Authalic sphere radius in meters (the constant H3 documents for its area/
+# edge-length tables) — one shared constant so Spark, the DuckDB twins and
+# the numpy oracles agree bit-for-bit on the meters scale.
+EARTH_RADIUS_M = 6371007.180918475
 
 
 def haversine_m_col(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Column:
-    """Great-circle meters between two points, mirroring knn.haversine_m's
-    expression tree exactly (explicit products, no pow) so DuckDB twins
-    written for one apply to both."""
+    """Great-circle meters between two points, pure column math (codegen,
+    no UDF); the kNN haversine metric and the way lengths both use it.
+
+    sin/cos make it antimeridian-safe by construction: dlon = 359.9 deg and
+    dlon = -0.1 deg give the same sin(dlon/2)^2. Written with explicit
+    products (no pow) so the DuckDB oracle twins mirror the operation order
+    exactly; ``knn.haversine_m_np`` is its numpy twin."""
     sp = F.sin(F.radians(lat2 - lat1) / F.lit(2.0))
     sl = F.sin(F.radians(lon2 - lon1) / F.lit(2.0))
     a = sp * sp + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2)) * sl * sl

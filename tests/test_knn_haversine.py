@@ -14,7 +14,7 @@ import pandas as pd
 import pytest
 
 from simple_osm_queries_spark.functions import h3_encode as E
-from simple_osm_queries_spark.operators import knn
+from simple_osm_queries_spark.operators import geodesy, knn
 
 
 def _cover_cells(qlon, qlat, res, disc_arc):
@@ -73,7 +73,8 @@ def test_haversine_column_matches_numpy(spark):
 
     got = (
         df.withColumn(
-            "d", knn.haversine_m(F.col("qlon"), F.col("qlat"), F.col("lon"), F.col("lat"))
+            "d",
+            geodesy.haversine_m_col(F.col("qlon"), F.col("qlat"), F.col("lon"), F.col("lat")),
         )
         .toPandas()["d"]
         .to_numpy()
@@ -131,13 +132,20 @@ def test_knn_h3_exact_haversine_matches_brute_oracle(spark, global_points):
         [(q, lo, la, k) for q, lo, la in KNN_QUERIES],
         "qid long, lon double, lat double, k int",
     )
-    res = knn.knn_h3_exact(pts, qdf, res=7, metric="haversine", disc_m=100_000).toPandas()
-    assert res["exact"].all()
-    for qid, qlo, qla in KNN_QUERIES:
-        exp_ids, exp_d = _oracle_topk(ids, lon, lat, qlo, qla, k)
-        got = res[res.qid == qid].sort_values("rank")
-        assert got["id"].tolist() == exp_ids, f"qid {qid}"
-        assert np.allclose(got["dist_m"].to_numpy(), exp_d, rtol=1e-9)
+    # a 2000 km disc at res 12 overflows the cover budget at plan time on
+    # the first round, so every query goes to the brute-force fallback
+    with pytest.raises(knn.CoverBudgetExceeded):
+        knn.knn_h3(pts, qdf, res=12, metric="haversine", disc_m=2_000_000)
+    for res_, disc_m in ((7, 100_000), (12, 2_000_000)):
+        res = knn.knn_h3_exact(
+            pts, qdf, res=res_, metric="haversine", disc_m=disc_m
+        ).toPandas()
+        assert res["exact"].all()
+        for qid, qlo, qla in KNN_QUERIES:
+            exp_ids, exp_d = _oracle_topk(ids, lon, lat, qlo, qla, k)
+            got = res[res.qid == qid].sort_values("rank")
+            assert got["id"].tolist() == exp_ids, f"res {res_} qid {qid}"
+            assert np.allclose(got["dist_m"].to_numpy(), exp_d, rtol=1e-9)
 
 
 def test_knn_brute_haversine_matches_oracle(spark, global_points):

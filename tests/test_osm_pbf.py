@@ -5,6 +5,7 @@ and an end-to-end query over PBF-imported data.
 Reference parity target: /root/reference/src/osm/reader.go:40-112 (osmpbf
 blob scan feeding the import handlers)."""
 
+import os
 import random
 import zlib
 
@@ -16,7 +17,7 @@ from simple_osm_queries_spark.sources import osm_pbf as P
 from simple_osm_queries_spark.sources.dataset import prepare
 from simple_osm_queries_spark.sources.osm_xml import parse_osm_xml, read_osm_xml
 
-REF_FIXTURE = "/root/reference/test-small.osm"
+REF_FIXTURE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "small.osm")
 
 
 # ---------------------------------------------------------------------------

@@ -1,7 +1,9 @@
-"""OSM XML source (on the reference's own fixture file), tag-index format
-round-trip, and the HTTP server endpoint."""
+"""OSM XML source (on the suite's own small fixture, the three nodes of
+FIXTURES.md section 4), tag-index format round-trip, and the HTTP server
+endpoint."""
 
 import json
+import os
 import threading
 import urllib.request
 
@@ -13,13 +15,32 @@ from simple_osm_queries_spark.sources import tag_index
 from simple_osm_queries_spark.sources.dataset import prepare
 from simple_osm_queries_spark.sources.osm_xml import parse_osm_xml, read_osm_pbf, read_osm_xml
 
-REF_FIXTURE = "/root/reference/test-small.osm"
+REF_FIXTURE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "small.osm")
+# the upstream project's own fixture, when its checkout sits beside this repo
+REFERENCE_OSM = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "reference",
+    "test-small.osm",
+)
 
 
 @pytest.fixture(scope="module")
 def ref_dataset(spark):
     nodes, ways, rels = read_osm_xml(spark, REF_FIXTURE)
     return prepare(nodes, ways, rels)
+
+
+@pytest.mark.skipif(
+    not os.path.exists(REFERENCE_OSM), reason="upstream test-small.osm not checked out"
+)
+def test_reference_file_matches_fixture():
+    """The upstream fixture parses to exactly the suite's own fixture (same
+    ids, coordinates and tags); test_parse_reference_fixture pins the
+    values themselves."""
+    ours, theirs = parse_osm_xml(REF_FIXTURE), parse_osm_xml(REFERENCE_OSM)
+    for a, b in zip(ours, theirs):
+        assert a.columns.tolist() == b.columns.tolist()
+        assert a.sort_values("id").to_dict("records") == b.sort_values("id").to_dict("records")
 
 
 def test_parse_reference_fixture():

@@ -157,14 +157,16 @@ def test_knn_brute_matches_oracle(spark, points, points_pd):
 
 
 def test_knn_kring_exact_matches_brute(spark, points, points_pd):
-    res = knn.knn_kring_exact(points, _queries_df(spark), ring=1)
-    got = {}
-    for r in res.collect():
-        assert r.exact
-        got.setdefault(r.qid, []).append((r.rank, r.id))
-    for qid, qlon, qlat, k in QUERY_POINTS:
-        expected = [i for i, _ in _knn_oracle(points_pd, qlon, qlat, k)]
-        assert [i for _, i in sorted(got[qid])] == expected, f"qid={qid}"
+    # ring=2 > max_ring=1 skips the doubling loop: straight to brute force
+    for kw in ({"ring": 1}, {"ring": 2, "max_ring": 1}):
+        res = knn.knn_kring_exact(points, _queries_df(spark), **kw)
+        got = {}
+        for r in res.collect():
+            assert r.exact
+            got.setdefault(r.qid, []).append((r.rank, r.id))
+        for qid, qlon, qlat, k in QUERY_POINTS:
+            expected = [i for i, _ in _knn_oracle(points_pd, qlon, qlat, k)]
+            assert [i for _, i in sorted(got[qid])] == expected, f"{kw} qid={qid}"
 
 
 def test_knn_kring_salted_same_result(spark, points, points_pd):
@@ -212,17 +214,24 @@ def test_knn_h3_exact_matches_oracle(spark, points, points_pd):
     """kNN over real H3 cells (disc-cover candidate generation) equals the
     equirectangular brute oracle for every query, incl. the outside-window
     query that needs disc doubling."""
-    res = knn.knn_h3_exact(points, _queries_df(spark), res=8)
-    got = {}
-    for r in res.collect():
-        assert r.exact
-        got.setdefault(r.qid, []).append((r.rank, r.id, r.dist2))
-    for qid, qlon, qlat, k in QUERY_POINTS:
-        expected = _knn_oracle_equirect(points_pd, qlon, qlat, k)
-        rows = sorted(got[qid])
-        assert [i for _, i, _ in rows] == [i for i, _ in expected], f"qid={qid}"
-        for (_, _, d2), (_, ed) in zip(rows, expected):
-            assert d2 == pytest.approx(ed)
+    # the largest disc h3_max_disc_deg admits at res 8 rounds up to 64
+    # sample rows a side, one over the cover's plan-time cap: the first
+    # round's check fires and every query goes to the brute-force fallback
+    max_disc = knn.h3_max_disc_deg(8)
+    with pytest.raises(knn.CoverBudgetExceeded):
+        knn.knn_h3(points, _queries_df(spark), res=8, disc_deg=max_disc)
+    for disc in (None, max_disc):
+        res = knn.knn_h3_exact(points, _queries_df(spark), res=8, disc_deg=disc)
+        got = {}
+        for r in res.collect():
+            assert r.exact
+            got.setdefault(r.qid, []).append((r.rank, r.id, r.dist2))
+        for qid, qlon, qlat, k in QUERY_POINTS:
+            expected = _knn_oracle_equirect(points_pd, qlon, qlat, k)
+            rows = sorted(got[qid])
+            assert [i for _, i, _ in rows] == [i for i, _ in expected], f"{disc} qid={qid}"
+            for (_, _, d2), (_, ed) in zip(rows, expected):
+                assert d2 == pytest.approx(ed)
 
 
 def test_knn_h3_salted_same_result(spark, points):
@@ -459,6 +468,88 @@ def test_point_in_polygon_h3_large_catalog(spark, points, points_pd):
         for r in point_in_polygon_h3_join(points, catalog, res=8).select("id", "qid").collect()
     }
     assert h3ed == plain and plain
+
+
+# --- kNN plan shape and jobs per call ----------------------------------------
+
+# jobs per call of the exact loops on the fixture below, as measured before
+# the two doubling loops were merged into one; the loop may not add any
+KRING_EXACT_JOBS = 20
+H3_EXACT_JOBS = 44
+
+
+@pytest.fixture(scope="module")
+def local_points(spark, points_pd):
+    """The fixture points as a local relation with a precomputed res-8 H3
+    column: no Python stage and no cache in the lineage, so plan node and
+    job counts belong to the kNN operator alone."""
+    from simple_osm_queries_spark.functions import h3_encode as E
+
+    pdf = points_pd[["id", "lon", "lat"]].copy()
+    pdf["h3a"] = E.lnglat_to_cell(pdf.lon.to_numpy(), pdf.lat.to_numpy(), 8).view(np.int64)
+    return spark.createDataFrame(pdf)
+
+
+def _executed_plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _jobs_while(spark, group, fn):
+    """fn() and the number of Spark jobs it launched, counted through a job
+    group (``group`` must be unique in the session)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_knn_plan_shapes(spark, local_points):
+    """k-ring is pure column math around one broadcast join; the H3 path
+    adds exactly two Arrow UDF nodes (the disc cover and the cell_h3
+    encode) under either metric, and only the cover when ``cell_col``
+    supplies the point cells."""
+    q = _queries_df(spark)
+    plan = _executed_plan(knn.knn_kring(local_points, q, ring=1))
+    assert "EvalPython" not in plan
+    assert plan.count("BroadcastHashJoin") == 1
+    for metric in ("equirect", "haversine"):
+        plan = _executed_plan(knn.knn_h3(local_points, q, res=8, metric=metric))
+        assert plan.count("ArrowEvalPython") == 2, metric
+        assert plan.count("BroadcastHashJoin") == 1, metric
+    plan = _executed_plan(knn.knn_h3(local_points, q, res=8, cell_col="h3a"))
+    assert plan.count("ArrowEvalPython") == 1
+    assert plan.count("BroadcastHashJoin") == 1
+
+
+def test_knn_jobs_per_call(spark, local_points):
+    """knn_h3 launches at most 2 jobs while it builds its plan: the max-|lat|
+    aggregate over the query side. That action must stay eager because its
+    value shapes the plan: it decides the polar split (which queries go to
+    brute force) and feeds the driver-side cover budget check. The exact
+    loops launch no more jobs per call than their pinned counts; a ring
+    that starts above ``max_ring`` launches none (straight to brute force)."""
+    q = _queries_df(spark)
+    for metric in ("equirect", "haversine"):
+        _, n = _jobs_while(
+            spark, f"knn-h3-plan-{metric}", lambda: knn.knn_h3(local_points, q, res=8, metric=metric)
+        )
+        assert n <= 2, (metric, n)
+    _, n = _jobs_while(
+        spark, "knn-kring-exact", lambda: knn.knn_kring_exact(local_points, q, ring=1)
+    )
+    assert n <= KRING_EXACT_JOBS, n
+    brute, n = _jobs_while(
+        spark,
+        "knn-kring-exact-brute",
+        lambda: knn.knn_kring_exact(local_points, q, ring=2, max_ring=1),
+    )
+    assert n == 0 and "BroadcastNestedLoopJoin" in _executed_plan(brute)
+    _, n = _jobs_while(spark, "knn-h3-exact", lambda: knn.knn_h3_exact(local_points, q, res=8))
+    assert n <= H3_EXACT_JOBS, n
 
 
 # --- raster tile rendering (r5b: vector -> raster direction) ----------------
